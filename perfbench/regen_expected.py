@@ -19,46 +19,26 @@ import sys
 import run
 
 
-def oracle_match(df, con, sql) -> bool:
-    """``parity.compare`` with one difference: a NULL timestamp the
-    oracle returns as pandas ``NaT`` counts as NULL (``parity._canon``
-    would turn it into the string 'NaT')."""
-    import pandas as pd
-    from databricks_delta_lake_project_spark.parity import _rows
-
-    s_cols = df.columns
-    s_rows = [tuple(r) for r in df.collect()]
-    pdf = con.execute(sql).df()
-    d_rows = [
-        tuple(None if x is pd.NaT else x for x in r)
-        for r in pdf.itertuples(index=False, name=None)
-    ]
-    return sorted(s_cols) == sorted(pdf.columns) and _rows(s_cols, s_rows) == _rows(
-        list(pdf.columns), d_rows
-    )
-
-
 def main() -> int:
     sys.path.insert(0, str(run.ROOT))
     run_dir = run.WORK / f"regen-{os.getpid()}"
     run._prepare_env(run_dir, run._cores())
     import workloads
-    from databricks_delta_lake_project_spark.parity import duckdb_connection
+    from databricks_delta_lake_project_spark.parity import compare, duckdb_connection
     from databricks_delta_lake_project_spark.queries.catalog import QUERIES
     from databricks_delta_lake_project_spark.session import get_spark
 
-    run._ensure_data()
     sf_dir = str(run.DATA_DIR)
     spark = get_spark(app_name="perfbench-regen")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb_connection(sf_dir)
     names = (workloads.BI_QUERIES + workloads.CURATION_QUERIES
-             + list(workloads.STREAM_DML_QUERIES))
+             + list(workloads.STREAM_QUERIES))
     out, bad = {}, []
     try:
         for name in names:
             fn, sql = QUERIES[name]
-            ok = oracle_match(fn(spark, sf_dir), con, sql)
+            ok = compare(fn(spark, sf_dir), con, sql)["values_match"]
             print(name, "matches the oracle" if ok else "DIFFERS from the oracle", flush=True)
             if not ok:
                 bad.append(name)

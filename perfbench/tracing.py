@@ -44,6 +44,7 @@ class Tracer:
     spans: list[Span] = field(default_factory=list)
     counters: dict[str, float] = field(default_factory=dict)
     op_span: int | None = None
+    paused: bool = False
     _local: threading.local = field(default_factory=threading.local)
     _lock: threading.Lock = field(default_factory=threading.Lock)
 
@@ -75,6 +76,15 @@ class Tracer:
             yield idx
         finally:
             self.close(idx)
+
+    @contextlib.contextmanager
+    def pause(self):
+        """Wrapped calls record no span and count nothing while the block runs."""
+        self.paused = True
+        try:
+            yield
+        finally:
+            self.paused = False
 
     def count(self, key: str, n: float = 1) -> None:
         with self._lock:
@@ -128,6 +138,8 @@ def _spanning(tracer: Tracer, name: str, on_result=None):
     def wrap(fn):
         @functools.wraps(fn)
         def inner(*args, **kwargs):
+            if tracer.paused:
+                return fn(*args, **kwargs)
             with tracer.span(name):
                 result = fn(*args, **kwargs)
             if on_result is not None:
@@ -271,7 +283,7 @@ class SparkCounters:
             ("spark.output_bytes", "outputBytes", 1),
             ("spark.shuffle_read_bytes", "shuffleReadBytes", 1),
             ("spark.shuffle_write_bytes", "shuffleWriteBytes", 1),
-            ("spark.spill_bytes", "memoryBytesSpilled", 1),
+            ("spark.spill_bytes", "diskBytesSpilled", 1),
             ("spark.executor_run_s", "executorRunTime", 1e-3),
             ("spark.executor_cpu_s", "executorCpuTime", 1e-9),
             ("spark.gc_s", "jvmGcTime", 1e-3),
@@ -287,7 +299,6 @@ class SparkCounters:
             out["spark.stages"] += 1
             for k, getter, scale in keys:
                 out[k] += getattr(sd, getter)() * scale
-            out["spark.spill_bytes"] += sd.diskBytesSpilled()
             if sd.executorRunTime() > longest[0]:
                 longest = (sd.executorRunTime(), sd)
         out["spark.stage_skew"] = self._skew(longest[1]) if longest[1] else 1.0
