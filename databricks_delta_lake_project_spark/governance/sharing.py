@@ -22,7 +22,7 @@ against the registry the provider wrote — the same trust boundary as
 the reference's workspace-level sharing (the provider's storage
 credentials ARE the hard boundary; the registry records intent and
 scoping). Shared tables resolve through ``LakeTable.for_path``, so
-both native tables and external ``_delta_log`` tables
+the engine's tables and external ``_delta_log`` tables
 (``tables/delta_interop.py``) are shareable, read-only.
 
 Scale notes: listing and auth are O(registry) driver-side JSON; data
@@ -248,10 +248,10 @@ class SharingClient:
         self, spark: SparkSession, url: str, starting_version: int = 0
     ) -> DataFrame:
         """Change-data-feed read of a shared table
-        (``delta_sharing_recipient.py:180-205``). Native tables read
-        their materialized change files; external Delta tables —
-        including read-only interop shapes (partitioned, column-mapped)
-        — synthesize insert rows from the ``_delta_log`` replay while
+        (``delta_sharing_recipient.py:180-205``). Engine-written
+        commits read their materialized change files; external Delta
+        tables — including read-only interop shapes (partitioned,
+        column-mapped) — synthesize insert rows from the ``_delta_log`` replay while
         append-only (``LakeTable.read_changes`` /
         ``DeltaInteropTable.read_changes``) — only a foreign rewrite
         commit (row-level deltas unrecoverable) is refused."""
@@ -298,9 +298,8 @@ class SharingClient:
         entry = self._resolve(url)
         if not (Path(entry["path"]) / "_delta_log").is_dir():
             raise ValueError(
-                "streaming a share requires a Delta-backed table "
-                "(create(format='delta') or an external _delta_log "
-                "table); batch load_table/load_cdf work on any format"
+                "streaming a share requires a Delta table; no "
+                f"_delta_log under {entry['path']}"
             )
         from ..sources.cdf_stream import register_cdf_stream
 

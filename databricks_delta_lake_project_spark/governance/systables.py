@@ -197,16 +197,14 @@ _IS_COLUMNS_SCHEMA = (
 )
 
 
-def _table_kind(spark: SparkSession, t) -> tuple[str, str]:
-    """``(table_type, data_source_format)`` for one registered handle.
-    Read-only interop handles (foreign ``_delta_log`` the engine may
-    not write) have no ``_log`` backend and are EXTERNAL DELTA; engine
-    tables report MANAGED when they live under the warehouse dir
-    (where metasql's managed CREATE lands them), EXTERNAL otherwise."""
-    log = getattr(t, "_log", None)
-    if log is None:
-        return "EXTERNAL", "DELTA"
-    fmt = "DELTA" if type(log).__name__ == "DeltaLogBackend" else "ENGINE"
+def _table_type(spark: SparkSession, t) -> str:
+    """``table_type`` for one registered handle. Read-only interop
+    handles (foreign ``_delta_log`` the engine may not write) have no
+    ``_log`` backend and are EXTERNAL; engine tables report MANAGED
+    when they live under the warehouse dir (where metasql's managed
+    CREATE lands them), EXTERNAL otherwise."""
+    if getattr(t, "_log", None) is None:
+        return "EXTERNAL"
     try:
         wh = spark.conf.get("spark.sql.warehouse.dir") or ""
     except Exception:  # noqa: BLE001
@@ -214,7 +212,7 @@ def _table_kind(spark: SparkSession, t) -> tuple[str, str]:
     managed = bool(wh) and str(t.root).startswith(
         wh.removeprefix("file:")
     )
-    return ("MANAGED" if managed else "EXTERNAL"), fmt
+    return "MANAGED" if managed else "EXTERNAL"
 
 
 _IS_CATALOGS_SCHEMA = "catalog_name string, comment string"
@@ -272,8 +270,8 @@ def tables_df(spark: SparkSession) -> DataFrame:
     for name, t in _visible_tables(spark):
         cat, sch, tbl = _split_name(name)
         try:
-            kind, fmt = _table_kind(spark, t)
-            rows.append((cat, sch, tbl, kind, fmt, str(t.root)))
+            kind = _table_type(spark, t)
+            rows.append((cat, sch, tbl, kind, "DELTA", str(t.root)))
         except Exception:  # noqa: BLE001
             continue
     # persistent views list alongside tables (UC's

@@ -160,9 +160,11 @@ def minhash_sig_array(hp: Column, num_hashes: int) -> Column:
     NULLs, so a slot still at the init sentinel had no non-null
     contribution — a true min is strictly below it). The init
     ``num_hashes << 56`` exceeds any h1 + k*h2 < num_hashes * 2^56
-    (56-bit halves, k < num_hashes) and overflows int64 loudly past
-    num_hashes = 127 — the same bound the per-seed form had under ANSI.
+    (56-bit halves, k < num_hashes) and overflows int64 past
+    num_hashes = 127, so larger values raise ``ValueError``.
     """
+    if num_hashes > 127:
+        raise ValueError(f"num_hashes must be at most 127, got {num_hashes}")
     init_val = num_hashes << 56
     seeds = F.array(*[F.lit(k).cast("long") for k in range(num_hashes)])
     nulls = F.array(

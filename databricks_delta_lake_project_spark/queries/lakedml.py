@@ -60,7 +60,6 @@ def q50_partitioned_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         str(table_path),
         df=orders.repartition(3, "status"),
-        format="delta",
         partition_by=["status"],
     )
     # 1) partition-predicate DELETE: prunes to the 'P' partition via
@@ -142,7 +141,6 @@ def q52_sql_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         str(work / "silver_customers"),
         df=base.repartition(4),
-        format="delta",
     )
     sqldml.register_table(spark, "silver_customers", t)
     register_views(spark, sf_dir)

@@ -272,8 +272,8 @@ def _travel_ts_ms(literal: str) -> int:
 def rewrite_time_travel(spark: SparkSession, sql: str) -> str:
     """Replace each ``<path> VERSION|TIMESTAMP AS OF <v>`` table ref
     with a temp view holding that snapshot. Path tables resolve through
-    ``LakeTable.for_path`` — native tables get both forms; external
-    Delta tables (read-only interop) support ``VERSION AS OF``."""
+    ``LakeTable.for_path`` — writable tables get both forms; read-only
+    interop handles support ``VERSION AS OF``."""
     from ..tables import LakeTable
 
     def _sub(m: re.Match) -> str:

@@ -1,19 +1,20 @@
-"""Read-only interop with the open Delta Lake table format.
+"""Read path of the open Delta Lake table format.
 
-The engine's own ACID format is the original parquet+JSON log in
-``log.py``, but every persistent table in the reference is stored as
-Delta (``/root/reference/config/pipeline_config.py:32-60``,
-``src/utils/delta_lake_features.py:37-41``). This module lets a user
-with existing Delta tables open them without ``delta-spark``: it
-replays the public ``_delta_log`` protocol (JSON commits + parquet
-checkpoints, as specified in the open Delta protocol) into an active
-file set and hands the files to a plain parquet scan.
+Every table the engine writes is a Delta table
+(``delta_log.DeltaLogBackend``), and every persistent table in the
+reference is stored as Delta (reference ``config/pipeline_config.py:32-60``,
+``src/utils/delta_lake_features.py:37-41``). This module replays the
+public ``_delta_log`` protocol (JSON commits + parquet checkpoints, as
+specified in the open Delta protocol) into an active file set and
+hands the files to a plain parquet scan, without ``delta-spark`` — so
+Delta tables written by other tools open too.
 
 Scale notes:
 * Log replay is driver-side but O(|log since checkpoint|) — the same
   contract delta-spark itself has; `_last_checkpoint` is honored so a
-  long-lived table replays O(checkpoint interval) JSON commits, and
-  the checkpoint parquet is read through Spark, not the driver.
+  long-lived table replays O(checkpoint interval) JSON commits. The
+  checkpoint parquet is read with pyarrow in this process, so a
+  snapshot lookup starts no Spark job.
 * Partitioned tables use Delta's hive-style data paths, so the scan
   recovers partition columns via ``basePath`` — one multi-file scan,
   no per-partition unions, and partition pruning still works.
@@ -28,7 +29,7 @@ from __future__ import annotations
 import json
 import uuid
 from pathlib import Path
-from typing import Any
+from typing import Any, Iterable
 
 import numpy as np
 import pandas as pd
@@ -597,48 +598,80 @@ class _State:
         return {c: fields.get(c, c) for c in self.partition_columns}
 
 
-def _replay_checkpoint(spark: SparkSession, root: str, version: int, state: _State) -> None:
+# checkpoint action columns the fold reads, each with the field that is
+# non-null exactly on rows carrying that action
+_CHECKPOINT_ACTIONS = {
+    "metaData": "schemaString",
+    "protocol": "minReaderVersion",
+    "add": "path",
+    "txn": "appId",
+    "sidecar": "path",
+}
+
+
+def _arrow_to_py(value: Any, typ: Any) -> Any:
+    """One pyarrow ``to_pylist`` value with every map (a list of
+    key/value pairs there) inside its structs turned into a dict."""
+    import pyarrow as pa
+
+    if value is None:
+        return None
+    if pa.types.is_map(typ):
+        return {k: _arrow_to_py(v, typ.item_type) for k, v in value}
+    if pa.types.is_struct(typ):
+        return {f.name: _arrow_to_py(value[f.name], f.type) for f in typ}
+    return value
+
+
+def _checkpoint_actions(
+    path: Path, kinds: Iterable[str] = tuple(_CHECKPOINT_ACTIONS)
+) -> list[dict[str, Any]]:
+    """The ``kinds`` actions of one checkpoint (or sidecar) parquet
+    file, one ``{kind: action}`` dict per non-null action cell; only
+    those columns are read."""
+    import pyarrow.parquet as papq
+
+    pf = papq.ParquetFile(path)
+    schema = pf.schema_arrow
+    cols = [c for c in kinds if c in schema.names]
+    out = []
+    for row in pf.read(columns=cols).to_pylist():
+        for c in cols:
+            cell = row[c]
+            if cell is not None and cell.get(_CHECKPOINT_ACTIONS[c]) is not None:
+                out.append({c: _arrow_to_py(cell, schema.field(c).type)})
+    return out
+
+
+def _replay_checkpoint(root: str, version: int, state: _State) -> None:
     """Fold a classic checkpoint parquet (one row per action) into state.
 
-    The checkpoint is read through Spark — it can be arbitrarily large
-    on a big table; only the surviving add-file rows are collected."""
+    Read with pyarrow in this process, so a snapshot lookup past a
+    checkpoint starts no Spark job; the fold holds every live add in
+    this process in any case."""
     log = Path(root) / DELTA_LOG_DIR
-    parts = sorted(str(p) for p in log.glob(f"{version:020d}.checkpoint*.parquet"))
+    parts = sorted(log.glob(f"{version:020d}.checkpoint*.parquet"))
     if not parts:
         raise FileNotFoundError(f"_last_checkpoint names v{version} but no parquet found")
-    cp = spark.read.parquet(*parts)
-    cols = set(cp.columns)
-    if "metaData" in cols:
-        for r in cp.filter(F.col("metaData.schemaString").isNotNull()).select("metaData").collect():
-            state.apply({"metaData": r["metaData"].asDict(recursive=True)})
-    if "protocol" in cols:
-        for r in cp.filter(F.col("protocol.minReaderVersion").isNotNull()).select("protocol").collect():
-            state.apply({"protocol": r["protocol"].asDict(recursive=True)})
-    if "add" in cols:
-        for r in cp.filter(F.col("add.path").isNotNull()).select("add").collect():
-            state.apply({"add": r["add"].asDict(recursive=True)})
-    if "txn" in cols:
-        for r in cp.filter(F.col("txn.appId").isNotNull()).select("txn").collect():
-            state.apply({"txn": r["txn"].asDict(recursive=True)})
-    if "sidecar" in cols:
-        # V2 checkpoints move most file actions into sidecar parquet
-        # files under _delta_log/_sidecars/, referenced by `sidecar`
-        # action rows in the top-level checkpoint. Folding only the
-        # top-level adds would yield a silently incomplete file set.
-        sidecar_paths = [
-            str(log / "_sidecars" / r["sidecar"]["path"])
-            for r in cp.filter(F.col("sidecar.path").isNotNull()).select("sidecar").collect()
-        ]
-        if sidecar_paths:
-            sc = spark.read.parquet(*sidecar_paths)
-            if "add" in sc.columns:
-                for r in sc.filter(F.col("add.path").isNotNull()).select("add").collect():
-                    state.apply({"add": r["add"].asDict(recursive=True)})
+    sidecars: list[Path] = []
+    for p in parts:
+        for action in _checkpoint_actions(p):
+            if "sidecar" in action:
+                # V2 checkpoints move most file actions into sidecar
+                # parquet files under _delta_log/_sidecars/; folding
+                # only the top-level adds would yield a silently
+                # incomplete file set
+                sidecars.append(log / "_sidecars" / action["sidecar"]["path"])
+            else:
+                state.apply(action)
+    for p in sidecars:
+        for action in _checkpoint_actions(p, ("add",)):
+            state.apply(action)
     # A checkpoint's `remove` rows are tombstones for VACUUM, not part
     # of the active set — files already absent from `add` stay absent.
 
 
-def _replay(spark: SparkSession, root: str, version: int | None) -> _State:
+def _replay(root: str, version: int | None) -> _State:
     versions = _commit_versions(root)
     if not versions:
         raise ValueError(f"not a Delta table (no _delta_log commits): {root}")
@@ -652,7 +685,7 @@ def _replay(spark: SparkSession, root: str, version: int | None) -> _State:
     start = 0
     cp = _last_checkpoint(root)
     if cp is not None and cp["version"] <= version:
-        _replay_checkpoint(spark, root, cp["version"], state)
+        _replay_checkpoint(root, cp["version"], state)
         start = cp["version"] + 1
     else:
         # Time travel to a pre-checkpoint version replays from zero —
@@ -699,15 +732,15 @@ class DeltaInteropTable:
 
     @property
     def schema(self) -> StructType:
-        state = _replay(self.spark, self.root, None)
+        state = _replay(self.root, None)
         assert state.schema_json is not None
         return StructType.fromJson(json.loads(state.schema_json))
 
     def properties(self) -> dict[str, Any]:
-        return _replay(self.spark, self.root, None).properties
+        return _replay(self.root, None).properties
 
     def to_df(self, version: int | None = None) -> DataFrame:
-        state = _replay(self.spark, self.root, version)
+        state = _replay(self.root, version)
         assert state.schema_json is not None
         schema = StructType.fromJson(json.loads(state.schema_json))
         if not state.adds:
@@ -890,7 +923,7 @@ class DeltaInteropTable:
             )
         # one replay at `end` supplies schema/partition/mapping context
         # for every scan and re-validates readability
-        state = _replay(self.spark, self.root, end)
+        state = _replay(self.root, end)
         assert state.schema_json is not None
         schema = StructType.fromJson(json.loads(state.schema_json))
         # cdc files carry the data columns (physical names under

@@ -1,9 +1,7 @@
-"""Write-back log backend for the open Delta Lake table format.
+"""The commit log behind every ``LakeTable``: the open Delta Lake format.
 
-``log.py`` is the engine's own parquet+JSON commit log; this module is
-a drop-in replacement (same duck-typed function surface ``LakeTable``
-consumes) that persists every commit as a real ``_delta_log`` entry
-following the public Delta protocol:
+Every commit is persisted as a real ``_delta_log`` entry following the
+public Delta protocol:
 
 * one ``{version:020d}.json`` per commit holding newline-delimited
   ``commitInfo`` / ``protocol`` / ``metaData`` / ``txn`` / ``add`` /
@@ -49,7 +47,6 @@ import uuid
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import SparkSession
 from pyspark.sql.types import StructField, StructType
 
 from . import delta_interop as di
@@ -238,14 +235,17 @@ def _stats_from_delta(add: dict[str, Any]) -> dict[str, Any]:
     return out
 
 
+class ConcurrentModificationError(RuntimeError):
+    """Lost an optimistic-concurrency race against a commit this
+    writer's plan logically conflicts with: the precomputed add/remove
+    actions were derived from a snapshot another writer has since
+    changed. Blind re-commit would resurrect their deletions or remove
+    files already gone — callers must recompute from the new snapshot
+    (Delta performs the same conflict checking on retry)."""
+
+
 class DeltaLogBackend:
-    """Duck-typed twin of the ``log`` module writing ``_delta_log``."""
-
-    DATA_DIR = DATA_DIR
-    CHANGES_DIR = CHANGES_DIR
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
+    """Reads and writes a table's ``_delta_log``."""
 
     # -- layout / discovery ------------------------------------------------
 
@@ -267,7 +267,7 @@ class DeltaLogBackend:
     # -- snapshot state (via the independent replay path) ------------------
 
     def _state(self, root: str, version: int | None = None) -> di._State:
-        return di._replay(self.spark, root, version)
+        return di._replay(root, version)
 
     def partition_columns(
         self, root: str, version: int | None = None
@@ -579,48 +579,28 @@ class DeltaLogBackend:
                     }
         return out
 
-    def read_log(
-        self, root: str, up_to: int | None = None, use_checkpoint: bool = False
-    ) -> list[dict[str, Any]]:
-        # JSON commits are never deleted, so the full translated log is
-        # always reconstructible; `use_checkpoint` (an engine-side
-        # replay optimization) is accepted and ignored.
-        return [
-            self.read_commit(root, v)
-            for v in self.list_versions(root)
-            if up_to is None or v <= up_to
-        ]
+    def read_log(self, root: str) -> list[dict[str, Any]]:
+        return [self.read_commit(root, v) for v in self.list_versions(root)]
 
-    def latest_checkpoint(
-        self, root: str, up_to: int | None = None
-    ) -> dict[str, Any] | None:
+    def latest_checkpoint(self, root: str) -> dict[str, Any] | None:
         """Checkpoint-seeded txn fold: idempotent-writer tracking must
-        survive pre-checkpoint JSON cleanup. Reads ONLY the checkpoint
-        parquet's txn column driver-side (no Spark job, no add-row
-        collect — txn_version runs per streaming micro-batch), and the
-        returned txns reflect exactly the checkpoint version, honoring
-        ``up_to`` like the native twin (callers replay later JSON
-        commits themselves)."""
+        survive pre-checkpoint JSON cleanup. Reads ONLY the newest
+        checkpoint's txn column, with pyarrow (txn_version runs per
+        streaming micro-batch); the returned txns reflect exactly the
+        checkpoint version (callers replay later JSON commits
+        themselves)."""
         cp = di._last_checkpoint(root)
-        if cp is None or (up_to is not None and cp["version"] > up_to):
+        if cp is None:
             return None
-        import pyarrow.parquet as papq
-
-        log = Path(root) / LOG_DIR
-        txns: dict[str, int] = {}
+        state = di._State()
         for p in sorted(
-            log.glob(f"{cp['version']:020d}.checkpoint*.parquet")
+            (Path(root) / LOG_DIR).glob(
+                f"{cp['version']:020d}.checkpoint*.parquet"
+            )
         ):
-            names = [f.name for f in papq.read_schema(p)]
-            if "txn" not in names:
-                continue
-            for row in papq.read_table(p, columns=["txn"]).to_pylist():
-                t = row.get("txn")
-                if t and t.get("appId") is not None:
-                    txns[t["appId"]] = max(
-                        int(t["version"]), txns.get(t["appId"], -1)
-                    )
-        return {"version": cp["version"], "txns": txns}
+            for action in di._checkpoint_actions(p, ("txn",)):
+                state.apply(action)
+        return {"version": cp["version"], "txns": state.txns}
 
     def version_at_timestamp(self, root: str, ts_ms: int) -> int:
         best = None
@@ -755,8 +735,6 @@ class DeltaLogBackend:
                 # validated pre-race). Disjoint-file activity — the
                 # streaming-append-during-DELETE case — proceeds, like
                 # Delta's WriteSerializable.
-                from .log import ConcurrentModificationError
-
                 ours = set(remove)
                 lo = -1 if planned_prev is None else planned_prev
                 for v in self.list_versions(root):

@@ -34,7 +34,7 @@ def persist_versioned(
     the final merge-read's disk state (the rows the successful commit
     was built on) so callers can adopt it / diff against it."""
     from . import LakeTable
-    from .log import ConcurrentModificationError
+    from .delta_log import ConcurrentModificationError
 
     last_err: Exception | None = None
     for _ in range(attempts):

@@ -22,7 +22,6 @@ def acl_world(spark, tmp_path):
         spark,
         str(tmp_path / "gold_c360"),
         df=spark.createDataFrame([Row(id=1, v=10), Row(id=2, v=20)]),
-        format="delta",
     )
     sqldml.register_table(spark, "cat.gold.c360", t)
     spark.conf.set(acl.ENABLED_CONF, "true")
@@ -94,7 +93,6 @@ def test_enforcement_off_by_default(spark, tmp_path):
         spark,
         str(tmp_path / "open_t"),
         df=spark.createDataFrame([Row(id=1)]),
-        format="delta",
     )
     sqldml.register_table(spark, "open_t", t)
     # accessControl.enabled is false: no grants required
@@ -150,7 +148,6 @@ def test_string_literal_does_not_trigger_select_check(spark, acl_world, tmp_path
         spark,
         str(tmp_path / "open_events"),
         df=spark.createDataFrame([Row(e=1)]),
-        format="delta",
     )
     sqldml.register_table(spark, "cat.gold.events_t", t2)
     for stmt in (
@@ -195,7 +192,6 @@ def test_comma_join_and_subquery_enforced_fail_closed(spark, acl_world, tmp_path
         spark,
         str(tmp_path / "other_t"),
         df=spark.createDataFrame([Row(o=1)]),
-        format="delta",
     )
     sqldml.register_table(spark, "cat.gold.other_t", t2)
     for stmt in (
@@ -216,7 +212,6 @@ def test_grant_ambiguous_suffix_raises(spark, acl_world, tmp_path):
         spark,
         str(tmp_path / "c360_dup"),
         df=spark.createDataFrame([Row(x=1)]),
-        format="delta",
     )
     sqldml.register_table(spark, "other.schema.c360", t2)
     try:
@@ -252,7 +247,6 @@ def test_reference_rls_view_flow_end_to_end(spark, acl_world, tmp_path):
                 Row(customer_id=3, state="TX"),
             ]
         ),
-        format="delta",
     )
     sqldml.register_table(spark, "cat.gold.cust_rls", t)
     sqldml.sync_views(spark)
@@ -327,7 +321,6 @@ def test_same_basename_source_still_needs_select(spark, acl_world, tmp_path):
         spark,
         str(tmp_path / "staging_c360"),
         df=spark.createDataFrame([Row(id=1, v=99)]),
-        format="delta",
     )
     sqldml.register_table(spark, "stage.gold.c360", src)
     try:

@@ -19,7 +19,7 @@ def test_occ_loser_retries_and_composes(spark, tmp_path, monkeypatch):
     """First overwrite attempt loses the commit race (simulated);
     the retry re-reads the rival's rows and lands BOTH sessions'
     catalogs."""
-    from databricks_delta_lake_project_spark.tables.log import (
+    from databricks_delta_lake_project_spark.tables.delta_log import (
         ConcurrentModificationError,
     )
 
@@ -165,7 +165,7 @@ def test_grants_rival_commit_between_read_and_write_retries(
 def test_five_straight_losses_surface(spark, tmp_path, monkeypatch):
     """A persist that loses five times raises instead of silently
     dropping the mutation; the journal survives for the next flush."""
-    from databricks_delta_lake_project_spark.tables.log import (
+    from databricks_delta_lake_project_spark.tables.delta_log import (
         ConcurrentModificationError,
     )
 

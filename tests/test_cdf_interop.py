@@ -253,7 +253,6 @@ def test_engine_dml_writes_protocol_cdc(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(id=1, val="a"), Row(id=2, val="b"), Row(id=3, val="c")]
         ),
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     t.update("id = 2", {"val": "'B!'"})                      # v1
@@ -309,7 +308,6 @@ def test_engine_partitioned_dml_protocol_cdc(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(p="x", id=1), Row(p="x", id=2), Row(p="y", id=3)]
         ),
-        format="delta",
         partition_by=["p"],
         properties={"delta.enableChangeDataFeed": "true"},
     )
@@ -342,7 +340,6 @@ def test_table_changes_sql_tvf(spark, tmp_path):
         spark,
         str(tmp_path / "tc_sql"),
         df=spark.createDataFrame([Row(id=1, val="a"), Row(id=2, val="b")]),
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     sqldml.register_table(spark, "tc_sql", t)
@@ -462,7 +459,6 @@ def test_table_changes_in_dml_source(spark, tmp_path):
         spark,
         str(tmp_path / "tc_src"),
         df=spark.createDataFrame([Row(id=1, val="a")]),
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     sqldml.register_table(spark, "tc_src", src)

@@ -51,7 +51,6 @@ def test_stream_cdf_end_to_end_and_restart(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(id=1, val="a"), Row(id=2, val="b"), Row(id=3, val="c")]
         ),
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     t.update("id = 2", {"val": "'B!'"})  # v1 (cdc)
@@ -83,7 +82,6 @@ def test_stream_cdf_starting_version(spark, tmp_path):
         spark,
         str(tmp_path / "cdfsv"),
         df=spark.createDataFrame([Row(id=1, val="a")]),
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     t.append(spark.createDataFrame([Row(id=2, val="b")]))  # v1
@@ -109,7 +107,6 @@ def test_stream_cdf_refuses_rewrite_without_cdc(spark, tmp_path):
         spark,
         str(tmp_path / "nocdf"),
         df=spark.createDataFrame([Row(id=1, val="a"), Row(id=2, val="b")]),
-        format="delta",
     )
     t.delete("id = 1")
     register_cdf_stream(spark)
@@ -135,7 +132,6 @@ def test_stream_cdf_partitioned_table(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(p="x", id=1, val="a"), Row(p="y", id=2, val="b")]
         ),
-        format="delta",
         partition_by=["p"],
         properties={"delta.enableChangeDataFeed": "true"},
     )
@@ -173,7 +169,6 @@ def test_rate_limit_option_refused(spark, tmp_path):
         spark,
         str(tmp_path / "rl"),
         df=spark.createDataFrame([Row(id=1, val="a")]),
-        format="delta",
     )
     register_cdf_stream(spark)
     df = (
@@ -203,7 +198,6 @@ def test_stream_cdf_null_typed_partition_value(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(id=1, bucket=10), Row(id=2, bucket=None)]
         ).select("id", F.col("bucket").cast("int").alias("bucket")),
-        format="delta",
         partition_by=["bucket"],
         properties={"delta.enableChangeDataFeed": "true"},
     )

@@ -122,7 +122,6 @@ def test_deep_clone_partitioned_delta(spark, tmp_path):
         df=spark.createDataFrame(
             [(1, "US"), (2, "US"), (3, "DE")], "id long, country string"
         ),
-        format="delta",
         partition_by=["country"],
     )
     deep = src.clone(str(tmp_path / "pdeep"), shallow=False)
@@ -148,7 +147,6 @@ def test_shallow_clone_partitioned_delta(spark, tmp_path):
         df=spark.createDataFrame(
             rows, "id long, country string, amount long"
         ).repartition(4),
-        format="delta",
         partition_by=["country"],
     )
     c = src.clone(str(tmp_path / "spc"), shallow=True)
@@ -205,7 +203,6 @@ def test_clone_of_live_dv_table_and_existing_target(spark, tmp_path):
         spark,
         str(tmp_path / "dvsrc"),
         df=spark.range(10).withColumn("v", F.lit(1)).coalesce(1),
-        format="delta",
         properties={"delta.enableDeletionVectors": "true"},
     )
     m = src.delete("id IN (2, 5)")
@@ -246,7 +243,6 @@ def test_clone_of_live_dv_table_and_existing_target(spark, tmp_path):
     # refuse too — a second commit log would fork the directory
     LakeTable.create(
         spark, str(tmp_path / "foreign"), df=spark.range(3),
-        format="delta",
     )
     with pytest.raises(ValueError, match="already exists"):
         ok.clone(str(tmp_path / "foreign"))

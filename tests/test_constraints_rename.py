@@ -14,14 +14,13 @@ from databricks_delta_lake_project_spark.queries.sqlpack import run_statement
 from databricks_delta_lake_project_spark.tables import LakeTable, sqldml
 
 
-def _mk(spark, tmp_path, name, fmt="delta"):
+def _mk(spark, tmp_path, name):
     t = LakeTable.create(
         spark,
         str(tmp_path / name),
         df=spark.createDataFrame(
             [Row(id=1, amount=10.0), Row(id=2, amount=20.0)]
         ),
-        format=fmt,
     )
     sqldml.register_table(spark, name, t)
     return t
@@ -65,13 +64,12 @@ def test_add_constraint_refuses_on_existing_violation(spark, tmp_path):
         t.add_constraint("POS", "amount > 1")
 
 
-@pytest.mark.parametrize("fmt", ["delta", "engine"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_drop_constraint_both_backends(spark, tmp_path, fmt):
-    """The unset works on BOTH log backends: the Delta backend omits
-    the key from its full configuration snapshot; the engine-native
-    merge-on-replay log needs a None tombstone."""
+    """The unset omits the key from the commit's full configuration
+    snapshot."""
     name = f"con_drop_{fmt}"
-    t = _mk(spark, tmp_path, name, fmt=fmt)
+    t = _mk(spark, tmp_path, name)
     t.add_constraint("amount_pos", "amount > 0")
     with pytest.raises(ValueError):
         t.append(spark.createDataFrame([Row(id=9, amount=-1.0)]))

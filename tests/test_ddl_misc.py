@@ -13,28 +13,27 @@ from databricks_delta_lake_project_spark.queries.sqlpack import run_statement
 from databricks_delta_lake_project_spark.tables import LakeTable, sqldml
 
 
-def _mk(spark, tmp_path, name, fmt="delta"):
+def _mk(spark, tmp_path, name):
     t = LakeTable.create(
         spark,
         str(tmp_path / name),
         df=spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v=None)]),
-        format=fmt,
         properties={"k1": "x", "k2": "y"},
     )
     sqldml.register_table(spark, name, t)
     return t
 
 
-@pytest.mark.parametrize("fmt", ["delta", "engine"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_unset_tblproperties_both_backends(spark, tmp_path, fmt):
-    t = _mk(spark, tmp_path, f"unset_{fmt}", fmt=fmt)
+    t = _mk(spark, tmp_path, f"unset_{fmt}")
     res = sqldml.run_dml(
         spark, f"ALTER TABLE unset_{fmt} UNSET TBLPROPERTIES ('k1')"
     )
     assert res["operation"] == "UNSET TBLPROPERTIES"
     assert "k1" not in t.properties() and t.properties()["k2"] == "y"
-    # gone across a fresh handle too (the merge-on-replay fold must
-    # not resurrect it)
+    # gone across a fresh handle too (the log replay must not
+    # resurrect it)
     assert "k1" not in LakeTable(spark, t.root).properties()
     with pytest.raises(ValueError, match="unknown keys"):
         sqldml.run_dml(
@@ -82,6 +81,12 @@ def test_create_table_comment_clause(spark, tmp_path):
     )
     t = sqldml.resolve_table(spark, "cc_t")
     assert t.properties()["comment"] == "made for tests"
+
+
+def test_is_table_recognises_sql_created_table(spark, tmp_path):
+    loc = tmp_path / "sql_made"
+    run_statement(spark, f"CREATE TABLE sql_made (id INT) LOCATION '{loc}'")
+    assert LakeTable.is_table(str(loc))
 
 
 def test_set_not_null_validates_and_enforces(spark, tmp_path):
@@ -137,7 +142,6 @@ def test_create_table_like(spark, tmp_path):
         spark,
         str(tmp_path / "like_src"),
         df=spark.createDataFrame([Row(day="d1", id=1)]),
-        format="delta",
         partition_by=["day"],
         properties={"k": "v", "comment": "src table"},
     )
@@ -223,7 +227,6 @@ def test_replace_where_atomic_partition_reload(spark, tmp_path):
         spark,
         str(tmp_path / "rw_t"),
         df=spark.createDataFrame(rows),
-        format="delta",
         partition_by=["day"],
         properties={"delta.enableChangeDataFeed": "true"},
     )
@@ -279,7 +282,6 @@ def test_insert_replace_where_sql(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="d1", id=1), Row(day="d2", id=2)]
         ),
-        format="delta",
         partition_by=["day"],
     )
     sqldml.register_table(spark, "rw_sql", t)
@@ -355,7 +357,6 @@ def test_replace_where_identity_obligations(spark, tmp_path):
                 StructField("day", StringType(), True),
             ]
         ),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(day="d1"), Row(day="d2")]))
     hwm0 = int(t.schema["uid"].metadata["delta.identity.highWaterMark"])
@@ -407,7 +408,6 @@ def test_replace_where_generated_column_cdf_agrees(spark, tmp_path):
         spark,
         str(tmp_path / "rw_gen"),
         schema=schema,
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     t.append(spark.createDataFrame([Row(id=1, day="d1")]))
@@ -431,7 +431,6 @@ def test_insert_overwrite_partition_static(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="d1", id=1), Row(day="d1", id=2), Row(day="d2", id=3)]
         ),
-        format="delta",
         partition_by=["day"],
     )
     sqldml.register_table(spark, "iop", t)
@@ -480,7 +479,6 @@ def test_insert_overwrite_partition_dynamic(spark, tmp_path):
                 Row(day="d2", region="eu", id=3),
             ]
         ),
-        format="delta",
         partition_by=["day", "region"],
         properties={"delta.enableChangeDataFeed": "true"},
     )
@@ -579,7 +577,6 @@ def test_insert_overwrite_dynamic_typed_partition_values(
                 Row(hr=datetime(2024, 1, 1, 1, 0, 0), n=7, id=2),
             ]
         ),
-        format="delta",
         partition_by=["hr", "n"],
     )
     sqldml.register_table(spark, "dynty", t)
@@ -605,7 +602,6 @@ def test_insert_overwrite_dynamic_typed_partition_values(
         df=spark.createDataFrame(
             [Row(day="o'hare", id=1), Row(day="a\\b", id=2)]
         ),
-        format="delta",
         partition_by=["day"],
     )
     sqldml.register_table(spark, "dynesc", t2)
@@ -655,7 +651,6 @@ def test_insert_partition_spec_validation(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="d1", id=1), Row(day=None, id=2)]
         ),
-        format="delta",
         partition_by=["day"],
     )
     sqldml.register_table(spark, "psv", t)
@@ -723,7 +718,6 @@ def test_fsck_repair_table(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(id=1), Row(id=2), Row(id=3)]
         ).repartitionByRange(3, "id"),
-        format="delta",
     )
     sqldml.register_table(spark, "fsck_t", t)
     victim = t._files()[0]
@@ -776,7 +770,6 @@ def test_type_widening(spark, tmp_path):
             "SELECT cast(id AS int) AS i, cast(id AS float) AS f, "
             "cast(id AS decimal(5,2)) AS d FROM range(3)"
         ),
-        format="delta",
     )
     sqldml.register_table(spark, "tw", t)
     with pytest.raises(ValueError, match="widening is disabled"):
@@ -856,7 +849,6 @@ def test_reorg_purge_on_shallow_clone(spark, tmp_path):
         spark,
         str(tmp_path / "rp_src"),
         df=spark.createDataFrame([Row(id=i) for i in range(6)]).coalesce(1),
-        format="delta",
         properties={"delta.enableDeletionVectors": "true"},
     )
     sqldml.register_table(spark, "rp_src", src)
@@ -890,7 +882,6 @@ def test_generate_symlink_manifest(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="d1", id=1), Row(day="d2", id=2)]
         ),
-        format="delta",
         partition_by=["day"],
     )
     sqldml.register_table(spark, "gsm", t)
@@ -939,7 +930,6 @@ def test_generate_symlink_manifest(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(id=i) for i in range(10)]
         ).coalesce(1),
-        format="delta",
         properties={"delta.enableDeletionVectors": "true"},
     )
     sqldml.register_table(spark, "gsmdv", t2)

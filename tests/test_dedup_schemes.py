@@ -17,6 +17,7 @@ from databricks_delta_lake_project_spark.operators.dedup import (
     incremental_near_dup_pairs,
     minhash_index,
     minhash_lsh_pairs,
+    minhash_sig_array,
     ngram_jaccard,
 )
 
@@ -96,3 +97,8 @@ def test_fast_minhash_never_overflows(spark):
     )
     out = minhash_lsh_pairs(df, "doc_id", "text", scheme="fast")
     out.collect()  # would raise ArithmeticException on overflow
+
+
+def test_minhash_sig_array_refuses_more_than_127_hashes(spark):
+    with pytest.raises(ValueError, match="at most 127"):
+        minhash_sig_array(F.col("hp"), 128)

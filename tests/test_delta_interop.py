@@ -450,8 +450,8 @@ def test_v2_checkpoint_sidecar_replay(spark, tmp_path):
 
 
 def test_native_table_still_wins(spark, tmp_path):
-    """for_path on the engine's own format returns a read-write
-    LakeTable, untouched by the interop path."""
+    """for_path on a table the engine created returns a read-write
+    LakeTable, not the read-only interop handle."""
     path = str(tmp_path / "native")
     LakeTable.create(spark, path, df=spark.range(3))
     t = LakeTable.for_path(spark, path)
@@ -631,7 +631,6 @@ def test_partitioned_delta_writeback_roundtrip(spark, tmp_path):
                 Row(day="d2", id=3, v=30.0),
             ]
         ),
-        format="delta",
         partition_by=["day"],
     )
     # hive layout + partitionValues on every add
@@ -688,7 +687,6 @@ def test_partitioned_dv_delete_and_vacuum(spark, tmp_path):
             [Row(day="d1", id=i) for i in range(8)]
             + [Row(day="d2", id=8)]
         ).coalesce(1),  # one file per partition → the DV path, not fully-dead
-        format="delta",
         partition_by=["day"],
         properties={"delta.enableDeletionVectors": "true"},
     )

@@ -28,7 +28,7 @@ def _mk(spark, tmp_path, name="dl", props=None):
         "id long, name string, amount double",
     )
     path = str(tmp_path / name)
-    t = LakeTable.create(spark, path, df=df, format="delta", properties=props)
+    t = LakeTable.create(spark, path, df=df, properties=props)
     return t, path
 
 
@@ -260,7 +260,7 @@ def test_delete_via_deletion_vectors(spark, tmp_path):
     )
     path = str(tmp_path / "dv_table")
     t = LakeTable.create(
-        spark, path, df=df.coalesce(1), format="delta",
+        spark, path, df=df.coalesce(1),
         properties={"delta.enableDeletionVectors": "true"},
     )
     data_files_before = sorted(p.name for p in (Path(path) / "data").iterdir())
@@ -308,7 +308,7 @@ def test_dv_delete_kills_whole_file(spark, tmp_path):
     )
     path = str(tmp_path / "dv_dead")
     t = LakeTable.create(
-        spark, path, df=df.coalesce(1), format="delta",
+        spark, path, df=df.coalesce(1),
         properties={"delta.enableDeletionVectors": "true"},
     )
     m = t.delete("id >= 0")
@@ -324,21 +324,13 @@ def test_dv_falls_back_to_rewrite_when_large(spark, tmp_path):
     )
     path = str(tmp_path / "dv_big")
     t = LakeTable.create(
-        spark, path, df=df.coalesce(1), format="delta",
+        spark, path, df=df.coalesce(1),
         properties={"delta.enableDeletionVectors": "true"},
     )
     m = t.delete("id < 50", dv_max_rows=10)
     assert "strategy" not in m  # rewrite path metrics
     assert m["numDeletedRows"] == 50
     assert t.to_df().count() == 50
-
-
-def test_dv_strategy_refused_on_engine_format(spark, tmp_path):
-    t = LakeTable.create(
-        spark, str(tmp_path / "eng"), df=spark.range(5)
-    )
-    with pytest.raises(ValueError, match="Delta log backend"):
-        t.delete("id = 1", strategy="dv")
 
 
 def test_commit_race_put_if_absent(spark, tmp_path):
@@ -367,7 +359,7 @@ def test_dv_read_plan_is_broadcast_antijoin(spark, tmp_path):
     )
     path = str(tmp_path / "dv_plan")
     t = LakeTable.create(
-        spark, path, df=df.coalesce(1), format="delta",
+        spark, path, df=df.coalesce(1),
         properties={"delta.enableDeletionVectors": "true"},
     )
     t.delete("id = 3")
@@ -386,7 +378,7 @@ def test_update_via_deletion_vectors(spark, tmp_path):
     )
     path = str(tmp_path / "dv_upd")
     t = LakeTable.create(
-        spark, path, df=df.coalesce(1), format="delta",
+        spark, path, df=df.coalesce(1),
         properties={"delta.enableDeletionVectors": "true"},
     )
     files_before = sorted(p.name for p in (Path(path) / "data").iterdir())
@@ -417,7 +409,7 @@ def test_vacuum_collects_orphaned_dv_bins(spark, tmp_path):
     )
     path = str(tmp_path / "dv_vac")
     t = LakeTable.create(
-        spark, path, df=df.coalesce(1), format="delta",
+        spark, path, df=df.coalesce(1),
         properties={"delta.enableDeletionVectors": "true"},
     )
     t.delete("id = 2")
@@ -451,7 +443,6 @@ def test_whole_partition_delete_is_metadata_only(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day=f"d{i % 3}", id=i) for i in range(30)]
         ).repartition(3, "day"),
-        format="delta",
         partition_by=["day"],
         properties={"delta.enableChangeDataFeed": "true"},
     )
@@ -487,7 +478,6 @@ def test_whole_file_delete_with_existing_dv_counts_alive_rows(spark, tmp_path):
             [Row(day="d1", id=i) for i in range(10)]
             + [Row(day="d2", id=10)]
         ).coalesce(1),
-        format="delta",
         partition_by=["day"],
         properties={"delta.enableDeletionVectors": "true"},
     )
@@ -750,7 +740,6 @@ def test_restore_across_dv_delete(spark, tmp_path):
         spark,
         path,
         df=spark.createDataFrame([Row(id=i) for i in range(6)]).coalesce(1),
-        format="delta",
         properties={"delta.enableDeletionVectors": "true"},
     )
     r = t.delete("id = 2")
@@ -785,7 +774,6 @@ def test_dv_delete_under_symlinked_root_and_special_chars(spark, tmp_path):
         spark,
         str(link / "t"),
         df=spark.createDataFrame([Row(id=i) for i in range(8)]).coalesce(1),
-        format="delta",
         properties={"delta.enableDeletionVectors": "true"},
     )
     r = t.delete("id = 3")
@@ -799,7 +787,6 @@ def test_dv_delete_under_symlinked_root_and_special_chars(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="a b", id=i) for i in range(4)] + [Row(day="c+d", id=9)]
         ).coalesce(1),
-        format="delta",
         partition_by=["day"],
         properties={"delta.enableDeletionVectors": "true"},
     )
@@ -822,7 +809,6 @@ def test_unsatisfiable_predicate_never_whole_drops(spark, tmp_path):
         spark,
         str(tmp_path / "unsat"),
         df=spark.createDataFrame([Row(a=3), Row(a=7)]).coalesce(1),
-        format="delta",
     )
     m = t.delete("a >= 5 AND a = 3")
     assert m["numDeletedRows"] == 0
@@ -839,7 +825,7 @@ def test_occ_retry_with_removes_raises_on_conflict(spark, tmp_path):
 
     from pyspark.sql import Row
 
-    from databricks_delta_lake_project_spark.tables.log import (
+    from databricks_delta_lake_project_spark.tables.delta_log import (
         ConcurrentModificationError,
     )
 
@@ -848,7 +834,6 @@ def test_occ_retry_with_removes_raises_on_conflict(spark, tmp_path):
         spark,
         path,
         df=spark.createDataFrame([Row(id=1), Row(id=2)]).coalesce(1),
-        format="delta",
     )
     log = Path(path) / "_delta_log"
     backend = t._log
@@ -993,7 +978,6 @@ def test_merge_via_deletion_vectors(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(id=i, v=float(i)) for i in range(10)]
         ).coalesce(1),
-        format="delta",
         properties={
             "delta.enableDeletionVectors": "true",
             "delta.enableChangeDataFeed": "true",
@@ -1170,8 +1154,8 @@ def test_check_constraints_and_invariants_enforced(spark, tmp_path):
 
 def test_constraint_enforcement_edges(spark, tmp_path):
     """Review-driven edge batch: the CDF post-image carries regenerated
-    generated-column values; CTAS validates the initial load; the
-    native engine format preserves invariant metadata across appends;
+    generated-column values; CTAS validates the initial load; a
+    schema-created table preserves invariant metadata across appends;
     pre-existing violating rows never block maintenance ops; typo'd
     strategies raise."""
     from pyspark.sql import Row
@@ -1192,7 +1176,6 @@ def test_constraint_enforcement_edges(spark, tmp_path):
         spark,
         str(tmp_path / "gen_cdf"),
         df=spark.createDataFrame([(1, 2)], gschema),
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     t.update("id = 1", {"id": "7"})
@@ -1210,11 +1193,10 @@ def test_constraint_enforcement_edges(spark, tmp_path):
             spark,
             str(tmp_path / "ctas_bad"),
             df=spark.createDataFrame([Row(amount=-5.0)]),
-            format="delta",
             properties={"delta.constraints.positive": "amount > 0"},
         )
 
-    # 3) native engine format keeps invariant metadata across appends
+    # 3) a schema-created table keeps invariant metadata across appends
     inv = json.dumps({"expression": {"expression": "id IS NOT NULL"}})
     nschema = ST([SF("id", L(), True, {"delta.invariants": inv})])
     tn = LakeTable.create(
@@ -1234,7 +1216,6 @@ def test_constraint_enforcement_edges(spark, tmp_path):
         spark,
         str(tmp_path / "pre_viol"),
         df=spark.createDataFrame([Row(a=-1), Row(a=5), Row(a=9)]).coalesce(1),
-        format="delta",
     )
     tv._log.commit(
         tv.root, "SET TBLPROPERTIES", [], [],
@@ -1357,18 +1338,9 @@ def test_mapped_rename_drop_guards(spark, tmp_path):
         spark,
         str(tmp_path / "plain_delta"),
         df=spark.createDataFrame([Row(a=1)]),
-        format="delta",
     )
     with pytest.raises(NotImplementedError, match="column mapping"):
         plain.rename_column("a", "b")
-    # engine-format table: needs the Delta backend
-    native = LakeTable.create(
-        spark,
-        str(tmp_path / "native_t"),
-        df=spark.createDataFrame([Row(a=1)]),
-    )
-    with pytest.raises(NotImplementedError, match="Delta log backend"):
-        native.drop_column("a")
 
 
 def test_merge_not_matched_by_source_builder(spark, tmp_path):
@@ -1380,7 +1352,7 @@ def test_merge_not_matched_by_source_builder(spark, tmp_path):
         [Row(id=i, status="active", v=i * 10) for i in range(1, 6)]
     )
     t = LakeTable.create(
-        spark, str(tmp_path / "bysrc"), df=df.coalesce(2), format="delta",
+        spark, str(tmp_path / "bysrc"), df=df.coalesce(2),
         properties={
             "delta.enableDeletionVectors": "true",
             "delta.enableChangeDataFeed": "true",

@@ -35,13 +35,12 @@ def _identity_schema(allow_explicit=False, start=100, step=10):
     )
 
 
-@pytest.mark.parametrize("fmt", ["engine", "delta"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_identity_generation_and_watermark(spark, tmp_path, fmt):
     t = LakeTable.create(
         spark,
         str(tmp_path / f"ident_{fmt}"),
         schema=_identity_schema(),
-        format=fmt,
     )
     t.append(spark.createDataFrame([Row(name="a"), Row(name="b")]))
     rows1 = {r["name"]: r["uid"] for r in t.to_df().collect()}
@@ -71,7 +70,6 @@ def test_generated_always_refuses_explicit(spark, tmp_path):
         spark,
         str(tmp_path / "ident_always"),
         schema=_identity_schema(allow_explicit=False),
-        format="delta",
     )
     with pytest.raises(ValueError, match="GENERATED ALWAYS"):
         t.append(spark.createDataFrame([Row(uid=1, name="x")]))
@@ -82,7 +80,6 @@ def test_generated_by_default_accepts_explicit_and_tracks(spark, tmp_path):
         spark,
         str(tmp_path / "ident_default"),
         schema=_identity_schema(allow_explicit=True),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(uid=5000, name="explicit")]))
     assert {r["uid"] for r in t.to_df().collect()} == {5000}
@@ -100,7 +97,6 @@ def test_negative_step_descends(spark, tmp_path):
         spark,
         str(tmp_path / "ident_desc"),
         schema=_identity_schema(start=0, step=-5),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(name="a"), Row(name="b")]))
     vals = sorted(r["uid"] for r in t.to_df().collect())
@@ -117,7 +113,6 @@ def test_identity_protected_from_update_and_merge(spark, tmp_path):
         spark,
         str(tmp_path / "ident_guard"),
         schema=_identity_schema(),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(name="a")]))
     with pytest.raises(ValueError, match="identity"):
@@ -184,7 +179,6 @@ def test_identity_with_many_partitions_unique(spark, tmp_path):
         spark,
         str(tmp_path / "ident_dist"),
         schema=_identity_schema(start=0, step=1),
-        format="delta",
     )
     df = spark.range(5000).repartition(16).select(
         F.concat(F.lit("n"), F.col("id")).alias("name")
@@ -203,7 +197,6 @@ def test_update_set_star_preserves_identity(spark, tmp_path):
         spark,
         str(tmp_path / "ident_star"),
         schema=_identity_schema(),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(name="a")]))
     uid0 = t.to_df().collect()[0]["uid"]
@@ -222,7 +215,6 @@ def test_merge_explicit_insert_advances_watermark(spark, tmp_path):
         spark,
         str(tmp_path / "ident_mergehwm"),
         schema=_identity_schema(allow_explicit=True),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(name="a")]))
     hwm0 = int(t.schema["uid"].metadata["delta.identity.highWaterMark"])
@@ -246,7 +238,6 @@ def test_overwrite_honors_identity(spark, tmp_path):
         spark,
         str(tmp_path / "ident_ow"),
         schema=_identity_schema(),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(name="a")]))
     hwm0 = int(t.schema["uid"].metadata["delta.identity.highWaterMark"])
@@ -273,7 +264,6 @@ def test_concurrent_identity_appends_unique_and_monotone(spark, tmp_path):
         spark,
         str(tmp_path / "ident_race"),
         schema=_identity_schema(start=0, step=1),
-        format="delta",
     )
     barrier = threading.Barrier(2)
     errs: list[Exception] = []
@@ -310,7 +300,6 @@ def test_overwrite_can_evolve_schema_with_identity(spark, tmp_path):
         spark,
         str(tmp_path / "ident_evolve"),
         schema=_identity_schema(),
-        format="delta",
     )
     t.append(spark.createDataFrame([Row(name="a")]))
     t.overwrite(spark.createDataFrame([Row(name="b", email="b@x.com")]))
@@ -338,7 +327,7 @@ def test_identity_requires_bigint(spark, tmp_path):
         ]
     )
     t = LakeTable.create(
-        spark, str(tmp_path / "ident_int"), schema=schema, format="delta"
+        spark, str(tmp_path / "ident_int"), schema=schema
     )
     with pytest.raises(ValueError, match="BIGINT"):
         t.append(spark.createDataFrame([Row(name="a")]))

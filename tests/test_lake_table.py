@@ -256,7 +256,6 @@ def test_partition_delete_is_metadata_only_zero_jobs(spark, tmp_path):
         spark,
         str(tmp_path / "pdel"),
         df=df.repartition(2, "updated"),
-        format="delta",
         partition_by=["updated"],
     )
     jobs0 = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()

@@ -1,14 +1,27 @@
-"""Commit-log checkpoint compaction: folds are seeded from the newest
-checkpoint, results identical to a from-zero replay, and time travel
-to pre-checkpoint versions still works."""
+"""Commit-log checkpoints: every 10th commit writes a parquet
+checkpoint plus ``_last_checkpoint``; folds seeded from it equal a
+from-zero replay, time travel to pre-checkpoint versions still works,
+and reading it starts no Spark job."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import uuid
+from pathlib import Path
+
+import pytest
 
 from databricks_delta_lake_project_spark.tables import LakeTable
-from databricks_delta_lake_project_spark.tables import log as tlog
-import pytest
+from databricks_delta_lake_project_spark.tables.delta_interop import (
+    _last_checkpoint,
+    _replay,
+)
+
+
+def _checkpoint_versions(root: str) -> list[int]:
+    log = Path(root) / "_delta_log"
+    return sorted(
+        int(p.name.split(".")[0]) for p in log.glob("*.checkpoint.parquet")
+    )
 
 
 @pytest.mark.slow
@@ -21,13 +34,13 @@ def test_checkpoint_written_and_equivalent(spark, tmp_path):
         t.append(spark.createDataFrame([(i, f"v{i}")], "id long, v string"))
 
     assert t.version() == 24
-    ckpts = tlog._checkpoint_versions(root)
-    assert ckpts == [20]
+    assert _checkpoint_versions(root) == [10, 20]
+    assert _last_checkpoint(root)["version"] == 20
 
     # fold through checkpoint == raw replay
-    via_ckpt = {e["path"] for e in tlog.active_files(root)}
+    via_ckpt = {e["path"] for e in t._files()}
     raw: dict[str, dict] = {}
-    for c in tlog.read_log(root, use_checkpoint=False):
+    for c in t._log.read_log(root):
         for r in c.get("remove", []):
             raw.pop(r, None)
         for a in c.get("add", []):
@@ -47,13 +60,13 @@ def test_checkpoint_preserves_properties_and_schema(spark, tmp_path):
     t = LakeTable.create(
         spark, root,
         df=spark.createDataFrame([(0,)], "id long"),
-        properties={"enableChangeDataFeed": True},
+        properties={"enableChangeDataFeed": "true"},
     )
     for i in range(1, 22):
         t.append(spark.createDataFrame([(i,)], "id long"))
-    assert tlog._checkpoint_versions(root) == [20]
+    assert _checkpoint_versions(root) == [10, 20]
     # properties and schema survive the checkpointed fold
-    assert t.properties() == {"enableChangeDataFeed": True}
+    assert t.properties() == {"enableChangeDataFeed": "true"}
     assert [f.name for f in t.schema.fields] == ["id"]
     # CDF kept recording through checkpointed commits
     assert t.read_changes(starting_version=21).count() == 1
@@ -68,12 +81,12 @@ def test_append_txn_idempotent_and_checkpointed(spark, tmp_path):
     t = LakeTable.create(
         spark, root, df=spark.createDataFrame([(0,)], "id long")
     )
-    for b in range(21):  # crosses the checkpoint at commit 20
+    for b in range(21):  # crosses the checkpoints at commits 10 and 20
         v = t.append_txn(
             spark.createDataFrame([(100 + b,)], "id long"), "streamA", b
         )
         assert v > 0
-    assert tlog._checkpoint_versions(root) == [20]
+    assert _checkpoint_versions(root) == [10, 20]
     assert t.to_df().count() == 22
 
     # replays of already-landed batches are skipped (no rows, no commit)
@@ -94,6 +107,40 @@ def test_append_txn_idempotent_and_checkpointed(spark, tmp_path):
     assert t.txn_version("streamA") == 20
     assert t.txn_version("streamB") == 5
     assert t.txn_version("absent") == -1
+
+
+def test_snapshot_lookup_after_checkpoint_starts_no_spark_job(
+    spark, tmp_path
+):
+    """The checkpoint is read with pyarrow: opening a table past its
+    checkpoint and resolving its files, schema and properties runs no
+    Spark job, while the data scan after it does."""
+    root = str(tmp_path / "t")
+    t = LakeTable.create(
+        spark, root, df=spark.createDataFrame([(0, "a")], "id long, v string")
+    )
+    for i in range(10):  # metadata commits: v10 writes the checkpoint
+        t.set_tags({"k": str(i)})
+    assert _last_checkpoint(root)["version"] == 10
+
+    sc = spark.sparkContext
+    group = f"snapshot-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "snapshot lookup after a checkpoint")
+    try:
+        fresh = LakeTable(spark, root)
+        files = fresh._files()
+        assert [f.name for f in fresh.schema.fields] == ["id", "v"]
+        assert fresh.tags() == {"k": "9"}
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert fresh.to_df().count() == 1
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the checkpoint-seeded fold equals the JSON commits replayed
+    assert {e["path"] for e in files} == {
+        a["path"] for c in t._log.read_log(root) for a in c["add"]
+    }
+    assert _replay(root, None).properties == {"engine.tags.k": "9"}
 
 
 @pytest.mark.slow
@@ -133,7 +180,6 @@ def test_delta_checkpoint_preserves_dvs_and_partitioning(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="d1", id=i) for i in range(6)]
         ).coalesce(1),
-        format="delta",
         partition_by=["day"],
         properties={"delta.enableDeletionVectors": "true"},
     )
@@ -146,7 +192,7 @@ def test_delta_checkpoint_preserves_dvs_and_partitioning(spark, tmp_path):
     cp = _last_checkpoint(root)
     assert cp is not None and cp["version"] >= 10
     # checkpoint-seeded replay must still know the DV and partitioning
-    state = _replay(spark, root, None)
+    state = _replay(root, None)
     assert state.partition_columns == ["day"]
     dv_adds = [a for a in state.adds.values() if a.get("deletionVector")]
     assert dv_adds, "checkpoint dropped the deletionVector descriptor"
@@ -188,7 +234,6 @@ def test_delta_checkpoint_carries_protocol_features_txn_and_id(spark, tmp_path):
         spark,
         root,
         df=spark.createDataFrame([(i,) for i in range(6)], "id long").coalesce(1),
-        format="delta",
         properties={"delta.enableDeletionVectors": "true"},
     )
     t.delete("id = 2")  # upgrades protocol to 3/7 + deletionVectors
@@ -221,7 +266,7 @@ def test_delta_checkpoint_carries_protocol_features_txn_and_id(spark, tmp_path):
         p = log / f"{v:020d}.json"
         if p.exists():
             p.unlink()
-    state = _replay(spark, root, None)
+    state = _replay(root, None)
     assert state.txns == {"appA": 7}
     assert state.protocol["minReaderVersion"] == 3
     assert t.txn_version("appA") == 7

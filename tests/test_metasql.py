@@ -27,7 +27,6 @@ def world(spark, tmp_path):
                 Row(customer_id=2, amount=30.0, day="d2"),
             ]
         ),
-        format="delta",
         partition_by=["day"],
         properties={"quality": "silver", "engine.clusterBy": "customer_id"},
     )
@@ -158,7 +157,6 @@ def test_cache_table_path_addressed_refuses_loudly(spark, tmp_path):
         spark,
         str(tmp_path / "pathtab"),
         df=spark.createDataFrame([Row(x=1)]),
-        format="delta",
     )
     with pytest.raises(ValueError, match="registered table name"):
         run_statement(spark, f"CACHE TABLE `{t.root}`")
@@ -170,7 +168,7 @@ def test_analyze_conflicts_with_concurrent_property_change(
     """ANALYZE commits a FULL property snapshot; a rival property
     change landing between the stats job and the commit must raise a
     retryable conflict, never be silently reverted."""
-    from databricks_delta_lake_project_spark.tables.log import (
+    from databricks_delta_lake_project_spark.tables.delta_log import (
         ConcurrentModificationError,
     )
 
@@ -178,7 +176,6 @@ def test_analyze_conflicts_with_concurrent_property_change(
         spark,
         str(tmp_path / "an_race"),
         df=spark.createDataFrame([Row(x=1), Row(x=2)]),
-        format="delta",
     )
     sqldml.register_table(spark, "an_race", t)
     backend = t._log
@@ -216,7 +213,7 @@ def test_cache_dotted_path_never_caches_same_suffix_view(spark, tmp_path, world)
     table must refuse — not cache the unrelated registered view."""
     p = tmp_path / "events.transactions"
     LakeTable.create(
-        spark, str(p), df=spark.createDataFrame([Row(x=1)]), format="delta"
+        spark, str(p), df=spark.createDataFrame([Row(x=1)])
     )
     with pytest.raises(ValueError, match="registered table name"):
         run_statement(spark, f"CACHE TABLE `{p}`")
@@ -238,7 +235,6 @@ def test_show_tables_keeps_user_view_shadowing_engine_name(
         spark,
         str(tmp_path / "shadowt"),
         df=spark.createDataFrame([Row(a=1)]),
-        format="delta",
     )
     sqldml.register_table(spark, "ns2.shadowt", t)
     spark.createDataFrame([Row(user_owned=1)]).createOrReplaceTempView(
@@ -258,10 +254,9 @@ def test_show_tables_keeps_user_view_shadowing_engine_name(
 def test_engine_format_analyze_conflicts_with_schema_evolution(
     spark, tmp_path, monkeypatch
 ):
-    """Engine-log parity with the Delta backend: a property-snapshot
-    commit racing a rival SCHEMA change must conflict, not replay the
-    pre-evolution schema."""
-    from databricks_delta_lake_project_spark.tables.log import (
+    """A property-snapshot commit racing a rival SCHEMA change must
+    conflict, not replay the pre-evolution schema."""
+    from databricks_delta_lake_project_spark.tables.delta_log import (
         ConcurrentModificationError,
     )
 
@@ -269,7 +264,6 @@ def test_engine_format_analyze_conflicts_with_schema_evolution(
         spark,
         str(tmp_path / "an_engine"),
         df=spark.createDataFrame([Row(x=1)]),
-        format="engine",
     )
     sqldml.register_table(spark, "an_engine", t)
     backend = t._log

@@ -14,7 +14,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from databricks_delta_lake_project_spark.tables import LakeTable
-from databricks_delta_lake_project_spark.tables.log import (
+from databricks_delta_lake_project_spark.tables.delta_log import (
     ConcurrentModificationError,
 )
 
@@ -27,7 +27,7 @@ def _mk_table(spark, tmp_path, n=1000):
         F.col("id").alias("k"), F.lit(0).cast("long").alias("v")
     )
     return LakeTable.create(
-        spark, str(tmp_path / "raced"), df=df.coalesce(1), format="delta"
+        spark, str(tmp_path / "raced"), df=df.coalesce(1)
     )
 
 
@@ -231,7 +231,6 @@ def test_failed_dml_commit_unlinks_staged_files(spark, tmp_path, monkeypatch):
         spark,
         path,
         df=df,
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
 
@@ -292,7 +291,6 @@ def test_failed_dv_delete_keeps_live_files(spark, tmp_path, monkeypatch):
         spark,
         path,
         df=df,
-        format="delta",
         properties={
             "delta.enableChangeDataFeed": "true",
             "delta.enableDeletionVectors": "true",

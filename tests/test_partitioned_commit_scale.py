@@ -29,7 +29,6 @@ def test_merge_touching_one_of_1000_partitions(spark, tmp_path):
         spark,
         str(tmp_path / "parts1000"),
         df=df.repartition(N_PARTS, "p"),
-        format="delta",
         partition_by=["p"],
     )
     files = t._files()

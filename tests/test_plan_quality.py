@@ -185,7 +185,6 @@ def test_partitioned_delta_scan_is_single_filescan_with_partition_pruning(
         df=spark.createDataFrame(
             [Row(day=f"d{i % 3}", id=i) for i in range(30)]
         ).repartition(3, "day"),
-        format="delta",
         partition_by=["day"],
     )
     df = t.to_df().filter(F.col("day") == "d1")

@@ -24,7 +24,6 @@ def _dv_table(spark, tmp_path, name, partitioned=False):
         spark,
         str(tmp_path / name),
         df=spark.createDataFrame(rows).coalesce(1),
-        format="delta",
         partition_by=["day"] if partitioned else None,
         properties={"delta.enableDeletionVectors": "true"},
     )
@@ -108,7 +107,6 @@ def test_show_partitions_typed_from_log(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="d1", bucket=1, id=0), Row(day="d2", bucket=2, id=1)]
         ),
-        format="delta",
         partition_by=["day", "bucket"],
     )
     sqldml.register_table(spark, "sp_t", t)
@@ -151,7 +149,6 @@ def test_reorg_is_invisible_to_cdf(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(day="d1", id=i) for i in range(4)]
         ).coalesce(1),
-        format="delta",
         properties={
             "delta.enableDeletionVectors": "true",
             "delta.enableChangeDataFeed": "true",

@@ -272,7 +272,6 @@ def test_stream_shared_table_cdf_and_rows(spark, shared_world, tmp_path):
         df=spark.createDataFrame(
             [Row(region="US", customer_id=1, revenue=100.0)]
         ),
-        format="delta",
         properties={"delta.enableChangeDataFeed": "true"},
     )
     provider.add_table("c360_share", table_path, "analytics.stream_gold")
@@ -348,6 +347,9 @@ def test_stream_shared_table_cdf_and_rows(spark, shared_world, tmp_path):
         client.load_stream(spark, "c360_share.analytics.stream_gold")
     provider.grant("c360_share", "partner_team")
 
-    # engine-format (no _delta_log) tables refuse streaming loudly
-    with pytest.raises(ValueError, match="Delta-backed"):
-        client.load_stream(spark, "c360_share.analytics.revenue")
+    # a shared path with no _delta_log refuses streaming loudly
+    plain = str(tmp_path / "plain_parquet")
+    spark.range(1).write.parquet(plain)
+    provider.add_table("c360_share", plain, "analytics.plain")
+    with pytest.raises(ValueError, match="no _delta_log"):
+        client.load_stream(spark, "c360_share.analytics.plain")

@@ -52,7 +52,6 @@ def fn_world(spark, tmp_path):
                 Row(customer_id=2, email="bob@y.org", phone="555-0101"),
             ]
         ),
-        format="delta",
     )
     sqldml.register_table(spark, "fncat.silver.fn_customers", t)
     yield t

@@ -306,7 +306,6 @@ def test_alter_table_sql_forms(spark, tmp_path):
         spark,
         str(tmp_path / "alter_t"),
         df=spark.createDataFrame([Row(a=1, b="x")]),
-        format="delta",
         properties={"delta.columnMapping.mode": "name"},
     )
     sqldml.register_table(spark, "alter_t", t)
@@ -333,7 +332,6 @@ def test_maintenance_sql_statements(spark, tmp_path):
         spark,
         str(tmp_path / "maint_t"),
         df=spark.createDataFrame([Row(a=i, b=i % 4) for i in range(100)]),
-        format="delta",
     )
     for i in range(100, 104):
         t.append(spark.createDataFrame([Row(a=i, b=i % 4)]))
@@ -573,7 +571,6 @@ def test_dml_on_delta_path_tables(spark, tmp_path):
         spark,
         p,
         df=spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"),
-        format="delta",
     )
     run_statement(spark, f"DELETE FROM delta.`{p}` WHERE id = 1")
     run_statement(spark, f"UPDATE delta.`{p}` SET v = 'B' WHERE id = 2")
@@ -630,7 +627,6 @@ def test_create_table_identity_ddl(spark, tmp_path):
                 StructField("name", StringType(), True),
             ]
         ),
-        format="delta",
     )
     frame = spark.createDataFrame([("a",), ("b",), ("c",)], "name string")
     t_sql.append(frame.coalesce(1))
@@ -721,18 +717,17 @@ def test_create_table_generated_comparison_and_comment_literal(spark, tmp_path):
     assert got == {(3, True), (9, False)}
 
 
-@pytest.mark.parametrize("fmt", ["engine", "delta"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_alter_add_columns_sql(spark, tmp_path, fmt):
     """ALTER TABLE ADD COLUMNS (delta_lake_features.py:258-262):
-    metadata-only additive evolution on both backends — old rows
-    null-fill, new appends carry the column."""
+    metadata-only additive evolution — old rows null-fill, new
+    appends carry the column."""
     from pyspark.sql import Row
 
     t = LakeTable.create(
         spark,
         str(tmp_path / f"addc_{fmt}"),
         df=spark.createDataFrame([Row(id=1)]),
-        format=fmt,
     )
     sqldml.register_table(spark, f"addc_{fmt}", t)
     out = sqldml.run_dml(
@@ -760,7 +755,6 @@ def test_alter_column_comment_and_tags_sql(spark, tmp_path):
         spark,
         str(tmp_path / "govt"),
         df=spark.createDataFrame([Row(customer_id=1)]),
-        format="delta",
     )
     sqldml.register_table(spark, "govt", t)
     sqldml.run_dml(
@@ -788,19 +782,17 @@ def test_alter_column_comment_and_tags_sql(spark, tmp_path):
     assert LakeTable(t.spark, t.root).tags() == {"team": "data-eng"}
 
 
-@pytest.mark.parametrize("fmt", ["engine", "delta"])
+@pytest.mark.parametrize("fmt", ["delta"])
 def test_unset_tags_both_backends(spark, tmp_path, fmt):
-    """UNSET TAGS must actually delete on BOTH backends — the engine
-    log merges per-commit property dicts on replay (deletion is a None
-    tombstone), delta replaces wholesale (incl. unsetting the LAST
-    property, which still must emit metaData)."""
+    """UNSET TAGS must actually delete: the commit replaces the
+    configuration wholesale (incl. unsetting the LAST property, which
+    still must emit metaData)."""
     from pyspark.sql import Row
 
     t = LakeTable.create(
         spark,
         str(tmp_path / f"tags_{fmt}"),
         df=spark.createDataFrame([Row(x=1)]),
-        format=fmt,
     )
     t.set_tags({"pii": "true"})
     assert LakeTable(t.spark, t.root).tags() == {"pii": "true"}
@@ -817,7 +809,6 @@ def test_add_columns_rejects_duplicates_within_statement(spark, tmp_path):
         spark,
         str(tmp_path / "dupadd"),
         df=spark.createDataFrame([Row(id=1)]),
-        format="delta",
     )
     with pytest.raises(ValueError, match="already exists"):
         t.add_columns("a INT, A STRING")
@@ -830,7 +821,6 @@ def test_set_column_comment_case_insensitive(spark, tmp_path):
         spark,
         str(tmp_path / "cmtcase"),
         df=spark.createDataFrame([Row(customer_id=1)]),
-        format="delta",
     )
     t.set_column_comment("Customer_ID", "resolved like Spark")
     fresh = LakeTable(t.spark, t.root)
@@ -852,7 +842,6 @@ def test_merge_with_schema_evolution_rewrite(spark, tmp_path):
         df=spark.createDataFrame(
             [Row(id=1, v="a"), Row(id=2, v="b"), Row(id=3, v="c")]
         ),
-        format="delta",
     )
     sqldml.register_table(spark, "se_t", t)
     spark.createDataFrame(
@@ -895,7 +884,6 @@ def test_merge_schema_evolution_dv_and_cdf(spark, tmp_path):
         spark,
         str(tmp_path / "se_dv"),
         df=spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="b")]),
-        format="delta",
         properties={
             "delta.enableDeletionVectors": "true",
             "delta.enableChangeDataFeed": "true",
@@ -932,7 +920,6 @@ def test_merge_automerge_conf_and_no_evolution_default(spark, tmp_path):
         spark,
         str(tmp_path / "se_conf"),
         df=spark.createDataFrame([Row(id=1, v="a")]),
-        format="delta",
     )
     src = spark.createDataFrame([Row(id=1, v="A!", extra=7)])
     t.merge(src, "t.id = s.id").whenMatchedUpdateAll().execute()
@@ -957,7 +944,6 @@ def test_merge_schema_evolution_explicit_set_clause(spark, tmp_path):
         spark,
         str(tmp_path / "se_set"),
         df=spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="b")]),
-        format="delta",
     )
     sqldml.register_table(spark, "se_set", t)
     spark.createDataFrame(

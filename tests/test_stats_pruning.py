@@ -128,7 +128,6 @@ def test_generated_column_partition_pruning(spark, tmp_path):
         spark,
         str(tmp_path / "genpart"),
         df=spark.createDataFrame(df.rdd, schema),
-        format="delta",
         partition_by=["p_date"],
     )
     n_parts = len({e["partitionValues"]["p_date"] for e in t._files()})
@@ -192,7 +191,6 @@ def test_generated_column_pruning_date_trunc_month(spark, tmp_path):
         spark,
         str(tmp_path / "genmonth"),
         df=spark.createDataFrame(df.rdd, schema),
-        format="delta",
         partition_by=["p_month"],
     )
     all_files = len(t._files())

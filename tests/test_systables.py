@@ -33,7 +33,6 @@ def tag_world(spark, tmp_path):
                 Row(customer_id=2, email="b@y.org", phone="555-0101"),
             ]
         ),
-        format="delta",
     )
     sqldml.register_table(spark, "tagcat.silver.customers", t)
     yield t
@@ -173,7 +172,6 @@ def test_rename_and_drop_migrate_column_tags(spark, tmp_path):
         spark,
         str(tmp_path / "mapped"),
         df=spark.createDataFrame([Row(a=1, b="x")]),
-        format="delta",
         properties={"delta.columnMapping.mode": "name"},
     )
     t.set_column_tags("a", {"pii": "true", "pii_type": "id"})
@@ -193,7 +191,6 @@ def audit_world(spark, tmp_path):
         spark,
         str(tmp_path / "aud_customers"),
         df=spark.createDataFrame([Row(id=1, v=10), Row(id=2, v=20)]),
-        format="delta",
     )
     sqldml.register_table(spark, "audcat.silver.customers", t)
     spark.conf.set(acl.ENABLED_CONF, "true")
@@ -641,7 +638,6 @@ def test_table_lineage_from_dml_and_pipeline(spark, tag_world, tmp_path):
         df=spark.createDataFrame(
             [Row(customer_id=2, email="b2@y.org", phone="555-0199")]
         ),
-        format="delta",
     )
     sqldml.register_table(spark, "tagcat.silver.cust_updates", t2)
     try:
@@ -2318,7 +2314,6 @@ def test_merge_rows_produced_excludes_copied_rows(spark, tag_world, tmp_path):
         df=spark.createDataFrame(
             [Row(customer_id=1, email="new@x.com", phone="555-0100")]
         ),
-        format="delta",
     )
     sqldml.register_table(spark, "tagcat.silver.one_update", t2)
     try:
@@ -2352,7 +2347,6 @@ def test_extract_from_does_not_fabricate_lineage(spark, tag_world, tmp_path):
         spark,
         str(tmp_path / "order_date"),
         df=spark.createDataFrame([Row(x=1)]),
-        format="delta",
     )
     sqldml.register_table(spark, "tagcat.silver.order_date", t2)
     try:

@@ -8,8 +8,9 @@ e.g.   python tools/capture_plans.py r14 before
 Only DataFrame-building queries can be captured without running them;
 the machinery queries (q48/q50/q52/q53) EXECUTE table commits or
 streaming pipelines inside the builder, so for those the captured plan
-is the plan of the RETURNED (final-state) frame and the interesting
-per-phase plans are recorded by tools/profile_query.py instead.
+is the plan of the RETURNED (final-state) frame; their per-phase
+counters come from a traced benchmark run
+(python3 perfbench/run.py --trace 1) instead.
 """
 
 from __future__ import annotations

@@ -190,7 +190,6 @@ def dml_tail(spark, n: int) -> None:
             spark,
             work + "/t",
             df=base.repartition(20, "day"),
-            format="delta",
             partition_by=["day"],
         )
         # FIXED-SIZE incoming reload of one partition (same frame at
@@ -230,7 +229,6 @@ def dml_tail(spark, n: int) -> None:
                 .alias("bucket"),
             )
             .repartition("bucket"),
-            format="delta",
             properties={"delta.enableDeletionVectors": "true"},
         )
         # DV a bounded row set in exactly dv_files buckets — O(rows)
